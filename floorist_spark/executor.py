@@ -39,6 +39,7 @@ from enum import Enum
 
 from pyspark.sql import DataFrame
 
+from floorist_spark.operators import _cache
 from floorist_spark.storage import StorageClient
 
 #: Reference retry envelope (`floorist.py:22-23`).
@@ -121,7 +122,16 @@ class DumpExecutor:
 
     def execute(self, row: dict, dump_count: int) -> bool:
         """Run one dump; True on success. Never raises — failure isolation
-        is the contract (`floorist.py:180-256`)."""
+        is the contract (`floorist.py:180-256`). The dump owns the operator
+        intermediates its query persisted (they are tracked on this
+        thread) and frees them when it ends, so a many-dump floorplan stays
+        memory-flat and concurrent dumps never free each other's."""
+        try:
+            return self._execute(row, dump_count)
+        finally:
+            _cache.release_caches()
+
+    def _execute(self, row: dict, dump_count: int) -> bool:
         try:
             path, target = self.storage.make_path(row["prefix"], self.run_date)
             query = row["query"]

@@ -34,9 +34,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from floorist_spark.functions import textfrag as tf
-from floorist_spark.session import load_table, normalize_event_time
 from floorist_spark.operators._canon import CANON_EVENTS_D as _CEV
 from floorist_spark.operators._canon import STREAM_EVENTS_CTE as _SEV
+from floorist_spark.session import load_table, normalize_event_time, scoped_conf
+from floorist_spark.streaming.tuning import (
+    DEDUP_KEY_BYTES,
+    SHUFFLE_PARTITIONS,
+    STATE_KEY_BYTES,
+    batch_stats,
+    run_bounded_stream,
+    state_partition_count,
+)
 
 #: exact-accumulation cast for event values (values < 1e3, 6dp is lossless
 #: for the 2dp synthetic data; sum of 10k values fits DECIMAL(18,6))
@@ -180,26 +188,20 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # e01 — tumbling window (1 hour)
 # ---------------------------------------------------------------------------
 
-def _sized_events_state(spark: SparkSession, sf_dir: str, *key_cols: str):
-    """Data-derived state-partition scope for a streaming query over
-    ``_events_stream`` (see streaming.tuning): every such query carries
-    the event_id ingest-dedup operator (one tiny state entry per event)
-    plus its own per-key operator state; ``key_cols`` are the SQL
-    expressions of that operator's key."""
-    from floorist_spark.streaming.tuning import (
-        DEDUP_KEY_BYTES,
-        STATE_KEY_BYTES,
-        batch_stats,
-        sized_state,
-    )
-
+def _events_state_size(
+    spark: SparkSession, sf_dir: str, *key_cols: str
+) -> tuple[int, int, int]:
+    """(state bytes, rows per trigger, keys) sizing the state of a
+    streaming query over ``_events_stream`` (see streaming.tuning): every
+    such query carries the event_id ingest-dedup operator (one tiny state
+    entry per event) plus its own per-key operator state; ``key_cols`` are
+    the SQL expressions of that operator's key."""
     n_rows, n_keys = batch_stats(
         load_table(spark, sf_dir, "events"),
         *key_cols,
         cache_key=(os.path.realpath(sf_dir), "events"),
     )
-    state_bytes = n_rows * DEDUP_KEY_BYTES + n_keys * STATE_KEY_BYTES
-    return sized_state(spark, state_bytes, n_rows)
+    return n_rows * DEDUP_KEY_BYTES + n_keys * STATE_KEY_BYTES, n_rows, n_keys
 
 
 def e01_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -326,16 +328,10 @@ def e04_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    with _sized_events_state(spark, sf_dir, "date_trunc('hour', ts)", "event_type"):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName("e04_stream_sink")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table("e04_stream_sink").orderBy("window_start", "event_type")
+    return run_bounded_stream(
+        agg, "e04_stream_sink", "complete",
+        *_events_state_size(spark, sf_dir, "date_trunc('hour', ts)", "event_type"),
+    ).orderBy("window_start", "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -369,16 +365,10 @@ def e07_streaming_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    with _sized_events_state(spark, sf_dir, "date_trunc('hour', ts)", "event_type"):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName("e07_stream_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table("e07_stream_sink").orderBy("window_start", "event_type")
+    return run_bounded_stream(
+        agg, "e07_stream_sink", "append",
+        *_events_state_size(spark, sf_dir, "date_trunc('hour', ts)", "event_type"),
+    ).orderBy("window_start", "event_type")
 
 
 E07_SQL = f"""
@@ -425,16 +415,9 @@ def e08_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-user open sessions: user_id bounds the live keyspace (closed
     # sessions drop their state as the watermark passes)
-    with _sized_events_state(spark, sf_dir, "user_id"):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName("e08_stream_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table("e08_stream_sink").orderBy("user_id", "session_start")
+    return run_bounded_stream(
+        agg, "e08_stream_sink", "append", *_events_state_size(spark, sf_dir, "user_id")
+    ).orderBy("user_id", "session_start")
 
 
 E08_SQL = f"""
@@ -1021,9 +1004,16 @@ def e16_continuous_aggregate(
     store = os.path.join(work, "partials")
     ckpt = os.path.join(work, "ckpt")
 
-    # the only stateful operator here is the event_id ingest dedup
-    with _sized_events_state(spark, sf_dir, "event_id"):
-        query = (
+    # the only stateful operator here is the event_id ingest dedup; the
+    # stream runs inside the same state-sizing conf scope as
+    # run_bounded_stream, with a foreachBatch sink instead of memory
+    state_bytes, n_rows, _ = _events_state_size(spark, sf_dir, "event_id")
+    with scoped_conf(
+        spark,
+        SHUFFLE_PARTITIONS,
+        lambda session_n: state_partition_count(int(session_n), state_bytes, n_rows),
+    ):
+        (
             _events_stream(spark, sf_dir)
             .writeStream.foreachBatch(
                 lambda batch_df, batch_id: _e16_write_partials(
@@ -1033,8 +1023,8 @@ def e16_continuous_aggregate(
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        query.awaitTermination()
     return (
         spark.read.parquet(store)
         .groupBy("window_start", "event_type")
@@ -1150,22 +1140,17 @@ def e18_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     # join state is per-user watermark-bounded view buffers
-    with _sized_events_state(spark, sf_dir, "user_id"):
-        query = (
-            joined.select(
-                F.col("c_user").alias("user_id"),
-                "view_id",
-                "click_id",
-                F.expr("unix_micros(c_ts) - unix_micros(v_ts)").alias("gap_us"),
-            )
-            .writeStream.format("memory")
-            .queryName("e18_stream_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table("e18_stream_sink").orderBy("user_id", "click_id", "view_id")
+    return run_bounded_stream(
+        joined.select(
+            F.col("c_user").alias("user_id"),
+            "view_id",
+            "click_id",
+            F.expr("unix_micros(c_ts) - unix_micros(v_ts)").alias("gap_us"),
+        ),
+        "e18_stream_sink",
+        "append",
+        *_events_state_size(spark, sf_dir, "user_id"),
+    ).orderBy("user_id", "click_id", "view_id")
 
 
 E18_SQL = f"""

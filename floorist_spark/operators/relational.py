@@ -33,7 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from floorist_spark.session import load_table
+from floorist_spark.operators._cache import local_checkpoint, track
+from floorist_spark.session import load_table, scoped_conf
 
 # ---------------------------------------------------------------------------
 # Shared exact-arithmetic fragments (identical text runs in Spark and DuckDB)
@@ -1380,34 +1381,30 @@ def q45_recursive_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle (unbounded) returns the full calendar. The bounds are known
     # driver-side, so raise the limit to the actual span when needed.
     span = hi - lo + 1
-    limit = int(spark.conf.get("spark.sql.cteRecursionLevelLimit"))
-    if span + 8 <= limit:
-        return spark.sql(
-            "WITH RECURSIVE " + _q45_body("DIV", anchor=str(lo), stop=str(hi))
-        )
     # The limit is read from the session conf at EXECUTION time, so a
     # lazily-returned DataFrame would still hit the default cap once the
-    # raised value is restored. Scope the raise by materializing the
-    # (O(months)-row) calendar inside the raised window via an eager
-    # localCheckpoint, then put the session conf back — the checkpointed
-    # plan no longer re-runs the recursion at collect time. This is the
-    # engine's only session-conf touch and it now always round-trips.
-    spark.conf.set("spark.sql.cteRecursionLevelLimit", span + 8)
-    try:
-        # Track the checkpoint blocks in the _cache registry so the
-        # catalog-boundary release frees them (an untracked localCheckpoint
-        # persists RDD blocks until JVM GC — the leak _cache.py documents).
-        from floorist_spark.operators._cache import local_checkpoint, track
-
-        out, handle = local_checkpoint(
-            spark.sql(
-                "WITH RECURSIVE " + _q45_body("DIV", anchor=str(lo), stop=str(hi))
-            )
+    # raised value is restored. Scope the raise (never lowering the limit)
+    # and, when it was needed, materialize the (O(months)-row) calendar
+    # inside the scope via an eager localCheckpoint — the checkpointed
+    # plan no longer re-runs the recursion at collect time. The scope's
+    # lock also keeps a concurrent dump from reading another's raised
+    # value as the limit.
+    with scoped_conf(
+        spark,
+        "spark.sql.cteRecursionLevelLimit",
+        lambda limit: max(int(limit), span + 8),
+    ) as limit:
+        calendar = spark.sql(
+            "WITH RECURSIVE " + _q45_body("DIV", anchor=str(lo), stop=str(hi))
         )
+        if span + 8 <= int(limit):
+            return calendar
+        # track the checkpoint blocks so the catalog-boundary release frees
+        # them (an untracked localCheckpoint persists RDD blocks until JVM
+        # GC — the leak _cache.py documents)
+        out, handle = local_checkpoint(calendar)
         track(handle)
         return out
-    finally:
-        spark.conf.set("spark.sql.cteRecursionLevelLimit", limit)
 
 
 Q45_SQL = (

@@ -102,31 +102,18 @@ class FlooristSpark:
         independent Spark jobs, and one session schedules them
         concurrently across the cluster. Default stays sequential (exact
         reference parity, deterministic log interleaving); per-dump
-        isolation and the exit-code contract are unchanged either way."""
-        from floorist_spark.operators._cache import release_caches
-
+        isolation and the exit-code contract are unchanged either way, and
+        each dump frees its own intermediates (``DumpExecutor.execute``)."""
         rows = load_floorplan(self.config.floorplan_filename)
         max_parallel = int(environ.get("FLOORIST_MAX_PARALLEL_DUMPS", "1"))
-
+        numbers = range(1, len(rows) + 1)
         if max_parallel > 1 and len(rows) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=max_parallel) as pool:
-                results = list(
-                    pool.map(
-                        lambda it: self.executor.execute(it[1], it[0] + 1),
-                        enumerate(rows),
-                    )
-                )
-            dumped_count = sum(results)
-            release_caches()
+                dumped_count = sum(pool.map(self.executor.execute, rows, numbers))
         else:
-            dumped_count = 0
-            for i, row in enumerate(rows):
-                dumped_count += self.executor.execute(row, i + 1)
-                # free any operator intermediates this dump persisted —
-                # a many-dump floorplan must stay memory-flat
-                release_caches()
+            dumped_count = sum(map(self.executor.execute, rows, numbers))
 
         logging.info("Dumped %d from total of %d", dumped_count, len(rows))
         if dumped_count != len(rows):

@@ -20,6 +20,8 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -116,6 +118,30 @@ def get_spark(
     else:
         spark.conf.set(nanos_key, "true")
     return spark
+
+
+#: serializes every scoped conf write: SQL confs are session-wide, so two
+#: threads' set/restore windows must never interleave
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value):
+    """Set SQL conf ``key`` for the body, then restore it; yields the
+    value it replaced. ``value`` may be a callable of that previous value.
+
+    The whole window runs under one process-wide lock: a session conf is
+    visible to every thread, so concurrent dumps take their conf-scoped
+    work (bounded streams, q45's deep recursion) one at a time, and
+    nothing outside a scope ever observes another scope's value as the
+    one to restore."""
+    with _CONF_LOCK:
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(value(old) if callable(value) else value))
+        try:
+            yield old
+        finally:
+            spark.conf.set(key, old)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

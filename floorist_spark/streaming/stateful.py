@@ -140,25 +140,16 @@ def d08_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             GroupStateTimeout.NoTimeout,
         )
     )
-    from floorist_spark.streaming.tuning import STATE_KEY_BYTES, sized_state
+    from floorist_spark.streaming.tuning import STATE_KEY_BYTES, run_bounded_stream
 
     # one stateful operator, keyed by digest: distinct digests <= the
     # documents row count, which the parquet footers answer without a
     # data scan (see the tuning module for the scale-safety argument)
     n_docs = load_table(spark, sf_dir, "documents").count()
-    with sized_state(
-        spark, n_docs * STATE_KEY_BYTES, n_docs,
-        python_stateful=True, n_keys=n_docs,
-    ):
-        query = (
-            deduped.writeStream.format("memory")
-            .queryName("d08_stream_sink")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table("d08_stream_sink").orderBy("keep_doc_id")
+    return run_bounded_stream(
+        deduped, "d08_stream_sink", "update",
+        n_docs * STATE_KEY_BYTES, n_docs, n_docs, python_stateful=True,
+    ).orderBy("keep_doc_id")
 
 
 D08_SQL = """
@@ -356,7 +347,10 @@ def e15_custom_sessionizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow pass the final watermark is max(ts) − 10 min, making the
     emitted set deterministic and hash-checkable against e08's SQL oracle
     (minus the value sum, which this operator does not carry)."""
-    from floorist_spark.operators.events_analytics import _events_stream
+    from floorist_spark.operators.events_analytics import (
+        _events_state_size,
+        _events_stream,
+    )
 
     stream = (
         _events_stream(spark, sf_dir)
@@ -372,33 +366,15 @@ def e15_custom_sessionizer(spark: SparkSession, sf_dir: str) -> DataFrame:
         "append",
         GroupStateTimeout.EventTimeTimeout,
     )
-    from floorist_spark.streaming.tuning import (
-        DEDUP_KEY_BYTES,
-        STATE_KEY_BYTES,
-        batch_stats,
-        sized_state,
-    )
+    from floorist_spark.streaming.tuning import run_bounded_stream
 
     # two stateful operators: the event_id ingest dedup (one tiny entry
     # per event) and the per-user sessionizer state
-    n_rows, n_users = batch_stats(
-        load_table(spark, sf_dir, "events"), "user_id",
-        cache_key=(os.path.realpath(sf_dir), "events"),
-    )
-    state_bytes = n_rows * DEDUP_KEY_BYTES + n_users * STATE_KEY_BYTES
-    with sized_state(
-        spark, state_bytes, n_rows, python_stateful=True, n_keys=n_users,
-    ):
-        query = (
-            sessions.writeStream.format("memory")
-            .queryName("e15_stream_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
     return (
-        spark.table("e15_stream_sink")
+        run_bounded_stream(
+            sessions, "e15_stream_sink", "append",
+            *_events_state_size(spark, sf_dir, "user_id"), python_stateful=True,
+        )
         .select(
             "user_id",
             F.expr("timestamp_micros(start_us)").alias("session_start"),
@@ -564,7 +540,10 @@ def e26_alert_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
     10 min (ms-truncated), so the emitted anchor set is a deterministic
     prefix of the greedy chain — hash-checkable against the recursive-CTE
     oracle below."""
-    from floorist_spark.operators.events_analytics import _events_stream
+    from floorist_spark.operators.events_analytics import (
+        _events_state_size,
+        _events_stream,
+    )
 
     stream = (
         _events_stream(spark, sf_dir)
@@ -584,33 +563,16 @@ def e26_alert_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
         "append",
         GroupStateTimeout.EventTimeTimeout,
     )
-    from floorist_spark.streaming.tuning import (
-        DEDUP_KEY_BYTES,
-        STATE_KEY_BYTES,
-        batch_stats,
-        sized_state,
-    )
+    from floorist_spark.streaming.tuning import run_bounded_stream
 
     # two stateful operators: the event_id ingest dedup (one tiny entry
     # per event) and the per-(user, event_type) throttle anchors
-    n_rows, n_keys = batch_stats(
-        load_table(spark, sf_dir, "events"), "user_id", "event_type",
-        cache_key=(os.path.realpath(sf_dir), "events"),
-    )
-    state_bytes = n_rows * DEDUP_KEY_BYTES + n_keys * STATE_KEY_BYTES
-    with sized_state(
-        spark, state_bytes, n_rows, python_stateful=True, n_keys=n_keys,
-    ):
-        query = (
-            kept.writeStream.format("memory")
-            .queryName("e26_stream_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
     return (
-        spark.table("e26_stream_sink")
+        run_bounded_stream(
+            kept, "e26_stream_sink", "append",
+            *_events_state_size(spark, sf_dir, "user_id", "event_type"),
+            python_stateful=True,
+        )
         .select(
             "user_id",
             "event_type",
@@ -775,7 +737,10 @@ def e29_streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     on user_id (the stateful operator's key partitioning); emission is
     immediate on completion — append-safe because a completion can never
     be retracted."""
-    from floorist_spark.operators.events_analytics import _events_stream
+    from floorist_spark.operators.events_analytics import (
+        _events_state_size,
+        _events_stream,
+    )
 
     stream = _events_stream(spark, sf_dir).select(
         "user_id",
@@ -790,33 +755,15 @@ def e29_streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    from floorist_spark.streaming.tuning import (
-        DEDUP_KEY_BYTES,
-        STATE_KEY_BYTES,
-        batch_stats,
-        sized_state,
-    )
+    from floorist_spark.streaming.tuning import run_bounded_stream
 
     # two stateful operators: the event_id ingest dedup (one tiny entry
     # per event) and the per-user partial funnel chains
-    n_rows, n_users = batch_stats(
-        load_table(spark, sf_dir, "events"), "user_id",
-        cache_key=(os.path.realpath(sf_dir), "events"),
-    )
-    state_bytes = n_rows * DEDUP_KEY_BYTES + n_users * STATE_KEY_BYTES
-    with sized_state(
-        spark, state_bytes, n_rows, python_stateful=True, n_keys=n_users,
-    ):
-        query = (
-            completions.writeStream.format("memory")
-            .queryName("e29_stream_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
     return (
-        spark.table("e29_stream_sink")
+        run_bounded_stream(
+            completions, "e29_stream_sink", "append",
+            *_events_state_size(spark, sf_dir, "user_id"), python_stateful=True,
+        )
         .select(
             "user_id",
             F.expr("timestamp_micros(view_us)").alias("t_view"),

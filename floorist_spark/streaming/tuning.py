@@ -38,30 +38,36 @@ session value and this module is a no-op; it can only LOWER the store
 count when the data provably cannot use more stores. The inputs are
 measured from the batch twin of the stream source in one map-side
 combined aggregate (count + approx_count_distinct).
+
+:func:`run_bounded_stream` is the one way an operator runs a stateful
+stream into a memory sink (e16's ``foreachBatch`` stream takes the same
+scope directly): the partition count is applied through a scoped
+``spark.sql.shuffle.partitions`` (``session.scoped_conf``) that spans the
+query's whole lifetime, so concurrent dumps run their streams one at a
+time and the session value is always restored. A child session
+(``spark.newSession()``) would isolate the conf without the lock, but
+listeners registered on the engine session never hear its queries'
+progress.
 """
 
 from __future__ import annotations
 
 import math
-import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, functions as F
 
+from floorist_spark.session import scoped_conf
+
 #: Target bytes of state per store partition. Production stores are kept
 #: around this size so per-batch snapshot/commit and partition rebalance
-#: stay fast; env-overridable for cluster tuning.
-TARGET_STORE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_TARGET_STORE_BYTES", str(64 << 20))
-)
+#: stay fast.
+TARGET_STORE_BYTES = 64 << 20
 
 #: Minimum rows per trigger a state partition should fold before a second
 #: task is worth its scheduling + store fixed cost — for JVM stateful
 #: operators (windowed aggs, session windows, stream-stream joins,
 #: dropDuplicates), whose per-row fold is codegen-cheap.
-ROWS_PER_STATE_TASK = int(
-    os.environ.get("SPARK_GRAFT_ROWS_PER_STATE_TASK", str(64 << 10))
-)
+ROWS_PER_STATE_TASK = 64 << 10
 
 #: Same floor for queries whose fold runs in PYTHON
 #: (applyInPandasWithState): each key costs an Arrow group transfer +
@@ -72,9 +78,7 @@ ROWS_PER_STATE_TASK = int(
 #: the Python work parallel (100k rows → wants 49, clamps to the session
 #: value) while small corpora (10k rows at sf0.01 → 5 stores) still shed
 #: the per-store floor.
-PY_ROWS_PER_STATE_TASK = int(
-    os.environ.get("SPARK_GRAFT_PY_ROWS_PER_STATE_TASK", str(2 << 10))
-)
+PY_ROWS_PER_STATE_TASK = 2 << 10
 
 #: Keys floor for Python folds: the per-KEY invocation overhead (one
 #: Arrow group + one pandas frame + one state round-trip per key per
@@ -82,9 +86,11 @@ PY_ROWS_PER_STATE_TASK = int(
 #: Measured: d08 (5000 single-row keys) ran 2.2s at 32 partitions and
 #: 3.3s when the rows floor alone sized it to 3 — ~192 keys/task keeps
 #: its per-key Python amortized at the same per-store fixed cost.
-PY_KEYS_PER_STATE_TASK = int(
-    os.environ.get("SPARK_GRAFT_PY_KEYS_PER_STATE_TASK", "192")
-)
+PY_KEYS_PER_STATE_TASK = 192
+
+#: The session conf a streaming query reads its state-partition count
+#: from when its first micro-batch is planned.
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 #: Estimated state width of the exactly-once ingest dedup operator
 #: (dropDuplicates(event_id)): key + empty value + store overhead.
@@ -95,11 +101,11 @@ DEDUP_KEY_BYTES = 64
 STATE_KEY_BYTES = 256
 
 
-#: session-scoped memo of batch_stats results keyed on (session id,
-#: dataset dir, key expressions): the sizing statistic is read per
+#: process memo of batch_stats results keyed on (caller's key — dataset
+#: dir and table — plus key expressions): the sizing statistic is read per
 #: streaming-query start, and min-of-2 bench entries would otherwise pay
-#: the (small) stats aggregate twice. In-memory only, same lifetime
-#: discipline as the operator memo tier (a new session gets fresh ids).
+#: the (small) stats aggregate twice. The stats depend only on the files,
+#: so any session may reuse them.
 _STATS_CACHE: dict = {}
 
 
@@ -111,11 +117,10 @@ def batch_stats(
     immaterial against the /TARGET quantization. Key columns are SQL
     expressions (e.g. ``date_trunc('hour', ts)`` for a windowed agg's
     keyspace). Pass ``cache_key`` (e.g. (sf_dir, table)) to memoize for
-    the session."""
+    the process."""
     full_key = None
     if cache_key is not None:
-        sess = df.sparkSession
-        full_key = (id(sess), *cache_key, key_cols)
+        full_key = (*cache_key, key_cols)
         hit = _STATS_CACHE.get(full_key)
         if hit is not None:
             return hit
@@ -132,18 +137,17 @@ def batch_stats(
 
 
 def state_partition_count(
-    spark,
+    session_n: int,
     state_bytes: int,
     batch_rows: int,
     python_stateful: bool = False,
     n_keys: int = 0,
 ) -> int:
     """The formula from the module docstring. Never raises the session
-    setting. ``python_stateful`` selects the Python-fold rows floor
-    (PY_ROWS_PER_STATE_TASK) and, with ``n_keys``, adds the per-key
-    invocation floor (PY_KEYS_PER_STATE_TASK) for
+    setting ``session_n``. ``python_stateful`` selects the Python-fold
+    rows floor (PY_ROWS_PER_STATE_TASK) and, with ``n_keys``, adds the
+    per-key invocation floor (PY_KEYS_PER_STATE_TASK) for
     applyInPandasWithState queries."""
-    session_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     per_task = PY_ROWS_PER_STATE_TASK if python_stateful else ROWS_PER_STATE_TASK
     want = max(
         math.ceil(max(int(state_bytes), 1) / TARGET_STORE_BYTES),
@@ -154,31 +158,35 @@ def state_partition_count(
     return max(1, min(session_n, want))
 
 
-@contextmanager
-def sized_state(
-    spark,
+def run_bounded_stream(
+    stream: DataFrame,
+    sink: str,
+    output_mode: str,
     state_bytes: int,
     batch_rows: int,
-    python_stateful: bool = False,
     n_keys: int = 0,
-):
-    """Scope ``spark.sql.shuffle.partitions`` to the data-derived state
-    partition count for the duration of one streaming query
-    (set → start+awaitTermination inside the block → restored). The conf
-    is session-scoped, so the block must contain the query's whole
-    lifetime; the operators in this repo run their streams synchronously
-    inline, which is exactly that shape."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(
-        key,
-        str(
-            state_partition_count(
-                spark, state_bytes, batch_rows, python_stateful, n_keys
-            )
-        ),
-    )
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    python_stateful: bool = False,
+) -> DataFrame:
+    """Run ``stream`` over everything available now, then stop, into the
+    memory sink ``sink``; returns the sink table. State stores are sized
+    from ``state_bytes``/``batch_rows``/``n_keys`` (see
+    :func:`state_partition_count`) for the query's whole lifetime. The
+    sink table is resolved inside the scope, so a concurrent run of the
+    same entry cannot swap it before it is read."""
+    spark = stream.sparkSession
+
+    def sized(session_n: str) -> int:
+        return state_partition_count(
+            int(session_n), state_bytes, batch_rows, python_stateful, n_keys
+        )
+
+    with scoped_conf(spark, SHUFFLE_PARTITIONS, sized):
+        (
+            stream.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        return spark.table(sink)

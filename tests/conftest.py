@@ -25,8 +25,8 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 # zero actual failures. The DEFAULT invocation (`pytest tests/ -x -q`,
 # what the driver runs) now completes in well under 10 minutes: the
 # heavy per-operator semantic suites, the degenerate matrices, and the
-# full 224-entry oracle sweep are opt-in via FLOORIST_SLOW_TESTS=1 (the
-# builder runs that full tier every round; see OPTIMIZATION_r12.md).
+# full 224-entry oracle sweep are opt-in via FLOORIST_SLOW_TESTS=1 (each
+# change records its full-tier results in CHANGES.md).
 # The default tier keeps every unit/plan-pin/infra test, the streaming
 # and memo-chain correctness tests, and a representative oracle smoke
 # (ORACLE_SMOKE below) that covers each operator family plus every entry
@@ -38,8 +38,7 @@ RUN_SLOW = os.environ.get("FLOORIST_SLOW_TESTS", "") == "1"
 #: Whole modules deferred to the slow tier: per-operator semantic suites
 #: whose operators are all ALSO covered by the (driver-run) oracle gate,
 #: and the degenerate-corpus matrices. Seconds from the r12 full-suite
-#: timing run (/tmp/pytest_r12_initial.log, committed in
-#: OPTIMIZATION_r12.md).
+#: timing run (recorded in CHANGES.md).
 SLOW_TIER_FILES = {
     "test_degenerate_harness.py",  # 364s degenerate matrices
     "test_llm_operators.py",  # 350s two-scale semantic sweeps

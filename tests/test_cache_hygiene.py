@@ -129,3 +129,68 @@ def test_memo_evicts_on_dataset_switch(spark, tmp_path):
     assert dirs == {os.path.realpath(str(other))}
     release_caches()
     release_memos()
+
+
+def _digest(df) -> list[str]:
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def _has_cached_plans(spark) -> bool:
+    return not spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_build_on_another_thread_keeps_this_threads_caches(spark):
+    """Concurrent dumps: each thread owns the intermediates its catalog
+    builds tracked. Building an entry on thread B must not release what
+    thread A's entry still reads, and A's result must equal the
+    sequential one."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    release_caches()
+    release_memos()
+    assert not _has_cached_plans(spark)
+    qs = all_queries()
+    sequential = _digest(qs["t24_source_divergence"](spark, SF_SMOKE))
+    release_caches()
+
+    with ThreadPoolExecutor(1) as a, ThreadPoolExecutor(1) as b:
+        df = a.submit(qs["t24_source_divergence"], spark, SF_SMOKE).result(300)
+        assert _has_cached_plans(spark), "t24 persists a tracked intermediate"
+        b.submit(lambda: qs["q11_pricing_summary"](spark, SF_SMOKE).count()).result(300)
+        assert _has_cached_plans(spark), "thread B released thread A's caches"
+        assert a.submit(_digest, df).result(300) == sequential
+        b.submit(release_caches).result(60)
+        assert _has_cached_plans(spark)  # B owns none of them
+        a.submit(release_caches).result(60)
+    assert not _has_cached_plans(spark)
+    release_memos()
+    assert _n_persisted(spark) == 0
+
+
+def test_concurrent_memo_misses_build_one_copy(spark):
+    """Threads missing the same memo at once: one builds, every caller
+    gets that copy, and no orphaned persisted duplicate is left behind."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from floorist_spark.operators._cache import memo
+
+    release_memos()
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(100)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            futs = [pool.submit(memo, spark, "stress", SF_SMOKE, build) for _ in range(16)]
+            got = [f.result(300) for f in futs]
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(builds) == 1
+    assert all(df is got[0] for df in got)
+    release_memos()
+    assert _n_persisted(spark) == 0

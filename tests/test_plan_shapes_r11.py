@@ -131,9 +131,9 @@ def test_s16_rounds_persist_picked_no_exponential_inline(spark):
     # table per intermediate round, alongside pool and pairs — pinned at
     # the tracking registry (the plan text is unpinnable here: cached
     # build subtrees re-print under every InMemoryTableScan reference)
-    n0 = len(_cache._LIVE)
+    n0 = len(_cache.tracked())
     plan = _plan(s16_mmr_diversify(spark, SF_SMOKE))
-    assert len(_cache._LIVE) - n0 >= 2 + (MMR_K - 2), _cache._LIVE
+    assert len(_cache.tracked()) - n0 >= 2 + (MMR_K - 2), _cache.tracked()
     # every greedy round reads caches, never a fresh corpus scan
     assert "InMemoryTableScan" in plan
     assert "CartesianProduct" not in plan

@@ -13,6 +13,8 @@ import pytest
 from floorist_spark.config import Config
 from floorist_spark.runner import FlooristSpark
 
+from tests.conftest import SF_SMOKE
+
 PLAN = """
 - prefix: exports/values
   query: >-
@@ -197,3 +199,66 @@ def test_run_date_backfill(runner_factory, spark, monkeypatch):
     )
     assert os.path.isdir(d)
     assert spark.read.parquet(f"file://{d}").count() == 1
+
+
+#: catalog rows that persist (t24), checkpoint-or-scope a conf (q45) and
+#: stream with sized state (e29, d08), next to plain SQL rows
+MIXED_PLAN = """
+- prefix: exports/t24
+  query: catalog:t24_source_divergence
+- prefix: exports/q45
+  query: catalog:q45_recursive_gapfill
+- prefix: exports/e29
+  query: catalog:e29_streaming_funnel
+- prefix: exports/d08
+  query: catalog:d08_streaming_dedup
+  chunksize: 100
+- prefix: exports/orders
+  query: SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 3 = 0
+  chunksize: 50
+- prefix: exports/series
+  query: SELECT id AS n FROM range(0, 1000)
+  chunksize: 13
+"""
+
+
+def _export_digests(spark, out: str) -> dict[str, tuple[int, list[str]]]:
+    """Per prefix: (parquet files written, sorted rows)."""
+    got = {}
+    for row in ("t24", "q45", "e29", "d08", "orders", "series"):
+        d = os.path.join(out, "exports", row, "year_created=2025", "month_created=2", "day_created=3")
+        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        rows = spark.read.parquet(f"file://{d}").collect() if files else []
+        got[row] = (len(files), sorted(repr(tuple(r)) for r in rows))
+    return got
+
+
+def test_parallel_catalog_dumps_equal_sequential(spark, tmp_path, monkeypatch):
+    """Concurrent dumps that persist, checkpoint and stream must write
+    exactly what the sequential run writes, leave the session conf as
+    they found it, and free every intermediate they persisted."""
+    from floorist_spark.operators._cache import release_caches, release_memos
+
+    monkeypatch.setenv("FLOORIST_DATA_DIR", SF_SMOKE)
+    monkeypatch.setenv("FLOORIST_RUN_DATE", "2025-02-03")
+    plan = tmp_path / "floorplan.yaml"
+    plan.write_text(MIXED_PLAN)
+    release_caches()
+    release_memos()
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def export(name: str, parallel: int) -> dict:
+        monkeypatch.setenv("FLOORIST_MAX_PARALLEL_DUMPS", str(parallel))
+        out = tmp_path / name
+        out.mkdir()
+        cfg = Config(floorplan_filename=str(plan), output_uri=f"file://{out}", mode="native")
+        FlooristSpark(cfg, spark=spark).run()  # exits non-zero on any failed dump
+        return _export_digests(spark, str(out))
+
+    sequential = export("sequential", 1)
+    assert sequential["t24"][0] > 0 and sequential["e29"][0] > 0
+    for i in range(2):
+        assert export(f"parallel{i}", 4) == sequential
+        assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
+        release_memos()
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
